@@ -6,10 +6,10 @@ The reference implements zip by pickling each group into blobs and unioning
 Fugue must stay backend-agnostic. The Spark-native execution here is a
 tagged union: every input is projected onto the superset schema (payload
 columns prefixed per input, NULL elsewhere), unioned, hash-exchanged ONCE
-on the keys, and each key group is split back into per-input pandas frames
-inside mapInPandas. Versus cogroup().applyInPandas this saves a JVM↔Python
-round trip per group — an order of magnitude on small groups — and it
-generalizes to N inputs with the same single shuffle.
+on the keys, and each key group is split back into per-input frames inside
+mapInArrow, on transform's grouped executor. Versus cogroup().applyInPandas
+this saves a JVM↔Python round trip per group — an order of magnitude on
+small groups — and it generalizes to N inputs with the same single shuffle.
 
 ``how`` ∈ inner|left_outer|right_outer|full_outer|cross controls which key
 groups are emitted (reference zip semantics, execution_engine.py:1007-1029);
@@ -21,7 +21,6 @@ from __future__ import annotations
 import inspect
 from typing import Any, Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,10 +30,11 @@ from fugue_spark.schema import parse_schema
 from fugue_spark.transform import (
     PartitionCursor,
     _ArrowResultBatcher,
-    _arrow_group_bounds,
-    _group_bounds,
+    _compile_or_fallback,
     _group_frame_maker,
     _nan_safe_key_exprs,
+    _python_stage_partitions,
+    _run_groups,
     _table_to_pandas,
 )
 
@@ -43,11 +43,8 @@ __all__ = ["cotransform"]
 _HOWS = ("inner", "left_outer", "right_outer", "full_outer", "cross")
 
 
-_NO_KV: "list | None" = None  # sentinel: function takes no cursor, skip kv work
-
-
 def _union_cotransform(
-    dfs, keys, run, out_schema, wants_kv=True, side_forms=None, presort=(), how="full_outer"
+    dfs, keys, call, out_schema, wants_kv=True, side_forms=None, presort=(), how="full_outer"
 ):
     """Zip N dataframes as a tagged union: every input is projected onto the
     superset schema (its payload columns prefixed, others NULL), unioned,
@@ -61,7 +58,9 @@ def _union_cotransform(
     views of the partition's Arrow stream (the same win as transform's
     arrow fast path, q20 vs q11). ``presort`` is applied JVM-side inside
     the single partition sort (per-side column resolution via a CASE over
-    the tag), so no python-side sort runs per group."""
+    the tag), so no python-side sort runs per group. The groups run on
+    transform's grouped executor (``_run_groups``); ``call(frames, kv)``
+    gets one input per side and returns the raw user result."""
     cross = len(keys) == 0
     side_forms = side_forms or ["pd"] * len(dfs)
     payloads = [[c for c in d.columns if c not in keys] for d in dfs]
@@ -89,20 +88,15 @@ def _union_cotransform(
     combined = parts[0]
     for p in parts[1:]:
         combined = combined.unionByName(p)
-    # explicit count: keep AQE from byte-size-coalescing a python-heavy stage;
-    # core-bound floor for the same reason (python stages are CPU-bound, so a
-    # byte-sized shuffle conf must not throttle the python workers)
-    num = max(
-        int(combined.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
-        combined.sparkSession.sparkContext.defaultParallelism,
-    )
     # NaN-safe key exprs: float NULL and NaN must co-partition and sort
     # adjacent — pandas treats them as one key (see _nan_safe_key_exprs)
     key_exprs = _nan_safe_key_exprs(combined, keys)
     combined = (
-        combined.repartition(1) if cross else combined.repartition(num, *key_exprs)
+        combined.repartition(1)
+        if cross
+        else combined.repartition(_python_stage_partitions(combined), *key_exprs)
     )
-    # JVM-side sort: every (key, tag) run arrives contiguous in the Arrow
+    # JVM-side sort: every (key, tag) run arrives unbroken in the Arrow
     # stream, so the python side slices groups by run-length with no sort.
     # Presort rides the same sort: each side's column c lives at
     # __in{i}__{c}, so a CASE over the tag resolves "sort by c" per side —
@@ -133,7 +127,7 @@ def _union_cotransform(
         )
     # NOTE: __tag__ is deliberately NOT a sort key — each side is tag-
     # filtered before use, so within a key group a side's rows are
-    # contiguous in its own filtered frame regardless of tag interleaving,
+    # one unbroken run in its own filtered frame regardless of tag interleaving,
     # and the per-side exclusive prefix sums index any (a, b) boundary.
     # One fewer comparison column in the partition sort.
     combined = combined.sortWithinPartitions(
@@ -153,24 +147,27 @@ def _union_cotransform(
     tz = combined.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
     key_fields = [combined.schema[k] for k in keys]
 
-    def udf(it):
-        import itertools as _it
+    # which sides must be non-empty for a group to be emitted — checked on
+    # the prefix sums BEFORE any frame is built, so skipped groups cost two
+    # array loads, not N frame constructions
+    if how == "inner":
+        required = range(n_inputs)
+    elif how == "left_outer":
+        required = (0,)
+    elif how == "right_outer":
+        required = (n_inputs - 1,)
+    else:
+        required = ()
 
+    def start(tbl):
         import numpy as np
         import pyarrow as pa
 
-        it = iter(it)
-        first = next(it, None)
-        if first is None:
-            return
-        tbl = pa.Table.from_batches(list(_it.chain([first], it)))
         npart = tbl.num_rows
-        if npart == 0:
-            return
         # Split by tag ONCE per partition, Arrow-side (C++ filter, then one
         # to_pandas per SIDE — the union frame itself is never converted).
         # The JVM sort is on the keys (+ presort), so after the tag filter
-        # a side's rows inside a key group are contiguous in its own frame;
+        # a side's rows inside a key group are one run in its own frame;
         # the exclusive prefix-sum of the tag mask maps ANY (a, b) group
         # boundary of the union to that side's slice — O(1) per group.
         # The Arrow filter also makes the dtype story exact: a side's column
@@ -178,7 +175,6 @@ def _union_cotransform(
         # restores the input dtype with no astype pass (NULL padding from
         # other sides is gone before conversion).
         tags = tbl.column("__tag__").to_numpy()
-        sides: list[Any] = []
         makers: list[Any] = []
         empties: list[Any] = []
         prefix: list[Any] = []  # side-local exclusive prefix count at tbl pos
@@ -195,68 +191,33 @@ def _union_cotransform(
             if side_forms[i] == "pa":
                 # arrow-annotated side: groups are zero-copy Table.slice
                 # views — no pandas construction at all (q21 vs q12)
-                sides.append(stbl)
                 makers.append(lambda a, b, _t=stbl: _t.slice(a, b - a))
                 empties.append(stbl.slice(0, 0))
             else:
                 f = _table_to_pandas(stbl, side_fields[i], tz)
-                sides.append(f)
                 makers.append(_group_frame_maker(f))
                 empties.append(f.iloc[0:0])
+
+        def run(a, b, kv):
+            for i in required:
+                ex = prefix[i]
+                if ex[a] == ex[b]:
+                    return None
+            frames = []
+            for i in range(n_inputs):
+                ex = prefix[i]
+                sa, sb = ex[a], ex[b]
+                frames.append(makers[i](sa, sb) if sb > sa else empties[i])
+            return call(frames, kv)
+
+        return run
+
+    # cross zip: one group, the constant surrogate key, and no key values
+    needs_kv = wants_kv and not cross
+
+    def udf(it):
         batcher = _ArrowResultBatcher(out_cols, arrow_out_schema, "cotransform")
-        if cross:
-            out = batcher.add(run(list(sides), []))
-            if out is not None:
-                yield from out
-        else:
-            # null-free integer keys: bounds + key arrays straight from
-            # Arrow, skipping the key-column pandas materialization
-            fast = _arrow_group_bounds(tbl, keys)
-            if fast is not None:
-                bounds, karr_np = fast
-                karrs = karr_np if wants_kv else []
-            else:
-                kpdf = _table_to_pandas(tbl.select(keys), key_fields, tz)
-                _, bounds = _group_bounds(kpdf, keys, contiguous=True)
-                karrs = [kpdf[k].to_numpy() for k in keys] if wants_kv else []
-            # which sides must be non-empty for the group to be emitted —
-            # checked on the prefix sums BEFORE any frame is built, so
-            # skipped groups cost two array loads, not N frame constructions
-            if how == "inner":
-                required = range(n_inputs)
-            elif how == "left_outer":
-                required = (0,)
-            elif how == "right_outer":
-                required = (n_inputs - 1,)
-            else:
-                required = ()
-            for a, b in zip(bounds[:-1], bounds[1:]):
-                skip = False
-                for i in required:
-                    ex = prefix[i]
-                    if ex[a] == ex[b]:
-                        skip = True
-                        break
-                if skip:
-                    continue
-                frames = []
-                for i in range(n_inputs):
-                    ex = prefix[i]
-                    sa, sb = ex[a], ex[b]
-                    frames.append(makers[i](sa, sb) if sb > sa else empties[i])
-                if wants_kv:
-                    kv = [
-                        None if isinstance(v, float) and pd.isna(v) else v
-                        for v in (arr[a] for arr in karrs)
-                    ]
-                else:
-                    kv = _NO_KV
-                out = batcher.add(run(frames, kv))
-                if out is not None:
-                    yield from out
-        out = batcher.flush()
-        if out is not None:
-            yield from out
+        return _run_groups(it, key_fields, tz, start, batcher, needs_kv)
 
     return combined.mapInArrow(udf, schema=out_schema)
 
@@ -375,51 +336,32 @@ def cotransform(
             )
         side_forms.append("pa" if form == _IN_ARROW else "pd")
 
-    if compile is None:
-        from fugue_spark.transform import _default_compile_mode
+    def attempt_compile(mode: "bool | str") -> DataFrame:
+        from fugue_spark.compile import try_compile_cotransform
 
-        compile = _default_compile_mode()
-    if compile:
-        from fugue_spark.compile import TraceError, try_compile_cotransform
+        return try_compile_cotransform(
+            dfs,
+            using,
+            keys,
+            spec.presort,
+            out_schema,
+            kwargs,
+            wants_cursor,
+            how,
+            purity_check=(mode == "auto"),
+        )
 
-        try:
-            return try_compile_cotransform(
-                dfs,
-                using,
-                keys,
-                spec.presort,
-                out_schema,
-                kwargs,
-                wants_cursor,
-                how,
-                purity_check=(compile == "auto"),
-            )
-        except TraceError:
-            if compile == "strict":
-                raise
-            # fall through to the zip engine unchanged
-        except Exception as exc:
-            # non-TraceError = compiler defect: surface it for explicit
-            # compile=True/strict; for "auto" warn and use the zip engine
-            if compile == "strict" or compile is True:
-                raise
-            import warnings
-
-            warnings.warn(
-                "fugue_spark auto-compile failed unexpectedly "
-                f"({type(exc).__name__}: {exc}); falling back to the "
-                "zip execution path",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+    compiled = _compile_or_fallback(compile, attempt_compile, "zip")
+    if compiled is not None:
+        return compiled
 
     dummy_cursor = PartitionCursor(keys, [None] * len(keys), 0)
 
-    def run(frames: "list[Any]", kv: "list[Any] | None") -> Any:
+    def call(frames: "list[Any]", kv: "list[Any] | None") -> Any:
         # returns the RAW user result (dict / DataFrame / iterable) — the
-        # _ResultBatcher conforms and batches it; None skips the group.
-        # how-based group skipping happens in the udf loop on the prefix
-        # sums, BEFORE frames are built — no len() checks needed here.
+        # _ArrowResultBatcher conforms and batches it; None skips the group.
+        # how-based group skipping happens in the per-group builder on the
+        # prefix sums, BEFORE frames are built — no len() checks needed here.
         if wants_cursor:
             cursor = dummy_cursor if kv is None else PartitionCursor(keys, kv, 0)
             return using(cursor, *frames, **kwargs)
@@ -428,7 +370,7 @@ def cotransform(
     return _union_cotransform(
         dfs,
         keys,
-        run,
+        call,
         out_schema,
         wants_kv=wants_cursor,
         side_forms=side_forms,

@@ -395,8 +395,9 @@ def q10_sql_passthrough_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q11_transform_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B6: the flagship map engine — per-orderkey pandas function with
-    prepartition + presort, executed as groupBy().applyInPandas (one
-    shuffle on the key, Arrow exchange, no driver involvement)."""
+    prepartition + presort, executed on the grouped executor: one shuffle
+    on the key, one partition sort, mapInArrow with run-length group
+    slicing, no driver involvement."""
     from fugue_spark.transform import transform
 
     # project BEFORE the transform: the map engine must shuffle every column
@@ -486,8 +487,9 @@ def q12_cotransform_order_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q13_per_order(pdf):
-    # dict output → the engine's _ResultBatcher cheap path (one DataFrame
-    # per 1024 groups instead of one per group — ~0.5 ms/frame saved)
+    # dict output → the engine's _ArrowResultBatcher cheap path (one Arrow
+    # table per 1024 groups instead of one frame per group — ~0.5 ms saved
+    # per group)
     return {
         "l_orderkey": int(pdf.l_orderkey.iloc[0]),
         "n": len(pdf),

@@ -8,18 +8,25 @@ kept: a bare function declares its input/output shape via type annotations
 (fugue/dataframe/function_wrapper.py:322-553 registers the same forms) and
 its output schema via ``schema=`` or a ``# schema:`` comment hint.
 
-Execution maps onto the pandas-UDF family — the Arrow-vectorized fast path:
+Execution maps onto Spark's Arrow-vectorized Python UDFs:
 
-* grouped (``partition.by``)      → ``df.groupBy(keys).applyInPandas``
+* grouped (``partition.by``)      → place the key groups, one
+                                    ``sortWithinPartitions`` on keys then
+                                    presort, and ``df.mapInArrow``: the
+                                    grouped executor (``_run_groups``,
+                                    shared with cotransform) slices each
+                                    key group out of the partition by run
+                                    length
 * ungrouped / coarse              → ``df.mapInPandas`` (streaming iterator,
                                     so ``Iterable[pd.DataFrame]`` functions
                                     never materialize a whole partition)
-* arrow-annotated functions       → same paths, converted at the boundary
+* arrow-annotated functions       → same paths; grouped ones get zero-copy
+                                    ``Table.slice`` groups, no pandas
 
-Presort runs inside the UDF with pandas (na_position='last' to match the
-take/presort convention). ``on_init`` fires once per physical partition;
-``ignore_errors`` turns listed exceptions into empty output for that
-logical partition (reference: processors.py:330-338).
+Grouped presort runs JVM-side in that one partition sort (nulls last, the
+pandas na_position='last' convention of take/presort). ``on_init`` fires
+once per physical partition; ``ignore_errors`` turns listed exceptions into
+empty output for that logical partition (reference: processors.py:330-338).
 """
 
 from __future__ import annotations
@@ -154,6 +161,61 @@ def _default_compile_mode() -> "str | bool":
         False
         if os.environ.get("FUGUE_SPARK_AUTO_COMPILE", "1").lower() in ("0", "false", "no")
         else "auto"
+    )
+
+
+def _compile_or_fallback(
+    compile: "bool | str | None", attempt: Callable, fallback_path: str
+) -> "DataFrame | None":
+    """Resolve the ``compile`` mode and return ``attempt(mode)``, the
+    trace-compiled plan, or None when the caller should run its Python
+    ``fallback_path`` instead.
+
+    An untraceable function (``TraceError``) falls back silently unless
+    ``compile="strict"``. Any other exception is a compiler defect, not an
+    untraceable function: surface it when the user explicitly asked for
+    compilation; for "auto" warn (a silent fallback would hide tracer
+    regressions) and fall back, since the Python path must always be able
+    to run the call."""
+    if compile is None:
+        compile = _default_compile_mode()
+    if not compile:
+        return None
+    from fugue_spark.compile import TraceError
+
+    try:
+        return attempt(compile)
+    except TraceError:
+        if compile == "strict":
+            raise
+    except Exception as exc:
+        if compile == "strict" or compile is True:
+            raise
+        import warnings
+
+        warnings.warn(
+            "fugue_spark auto-compile failed unexpectedly "
+            f"({type(exc).__name__}: {exc}); falling back to the "
+            f"{fallback_path} execution path",
+            RuntimeWarning,
+            stacklevel=3,
+        )
+    return None
+
+
+def _python_stage_partitions(df: DataFrame) -> int:
+    """Shuffle partition count for an exchange that feeds a Python stage.
+
+    The count is pinned explicitly: AQE would otherwise coalesce by BYTE
+    size, collapsing a python-cost-heavy stage onto one core. Python stages
+    are CPU-bound, so parallelism is core-bound, not byte-bound: the count
+    is floored at the core count, and a byte-sized shuffle conf
+    (tune_for_input on a small input) must not throttle the python
+    workers."""
+    spark = df.sparkSession
+    return max(
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+        spark.sparkContext.defaultParallelism,
     )
 
 
@@ -663,131 +725,41 @@ def _group_frame_maker(pdf: pd.DataFrame):
         return lambda a, b: pdf.iloc[a:b]
 
 
-def _arrow_group_bounds(tbl: pa.Table, keys: list[str]):
-    """Run-length group bounds + per-key numpy arrays straight from the
-    Arrow table — no pandas materialization of the key columns. Valid when
-    every key is integer/bool with zero NULLs (the overwhelmingly common
-    case for join/group keys); returns None otherwise so the caller falls
-    back to the pandas path (which owns the NaN-is-a-key contract)."""
-    import numpy as np
+def _group_bounds(tbl: pa.Table, key_fields: list, tz: str):
+    """Run-length group bounds + per-key value arrays over a partition whose
+    key groups are unbroken runs (the engine's ``sortWithinPartitions``
+    guarantees it): one diff per key finds every group in O(n), with no
+    pandas groupby and no per-group index construction. Returns
+    ``(bounds, key_arrays)``; group ``g`` is rows ``bounds[g]:bounds[g+1]``.
 
-    arrs = []
-    for k in keys:
-        c = tbl.column(k)
-        t = c.type
-        if c.null_count != 0 or not (pa.types.is_integer(t) or pa.types.is_boolean(t)):
-            return None
-        arrs.append(c.to_numpy(zero_copy_only=False))
-    if tbl.num_rows == 0:
-        return np.array([0]), arrs
-    diff = None
-    for a in arrs:
-        d = a[1:] != a[:-1]
-        diff = d if diff is None else (diff | d)
-    bounds = np.flatnonzero(np.r_[True, diff, True])
-    return bounds, arrs
-
-
-def _group_bounds(pdf: pd.DataFrame, keys: list[str], contiguous: bool):
-    """Run-length group boundaries over key columns.
-
-    Groups are contiguous after the engine's repartition+sortWithinPartitions,
-    so one vectorized factorize per key + a diff finds every group in O(n) —
-    no pandas groupby object, no per-group index construction, no copies
-    (each group is an ``iloc`` block slice of the partition frame).
-    Returns (pdf, bounds) — pdf is re-ordered first iff not contiguous.
-    """
-    import numpy as np
-
-    # integer/bool keys need no factorize — the raw values ARE valid codes
-    # for both the run-length diff and lexsort (floats need factorize for
-    # the NaN-is-a-key contract, objects/strings for comparability)
-    def _codes(col: pd.Series):
-        if col.dtype.kind in "iub":
-            return col.to_numpy()
-        return pd.factorize(col, use_na_sentinel=False)[0]
-
-    codes = [_codes(pdf[k]) for k in keys]
-    if not contiguous:
-        order = np.lexsort(codes[::-1])  # stable; groups become contiguous
-        pdf = pdf.iloc[order].reset_index(drop=True)
-        codes = [c[order] for c in codes]
+    Null-free integer/bool keys (the overwhelmingly common case for
+    join/group keys) are read straight from Arrow: the raw values ARE valid
+    run codes, so the key columns never become pandas. Any other key type
+    converts the key columns with pyspark's pandas semantics and
+    factorizes them: this is the one place that keeps the NaN-is-a-key
+    contract (float NaN and NULL become ONE code) and makes
+    objects/strings comparable."""
+    keys = [f.name for f in key_fields]
+    cols = [tbl.column(k) for k in keys]
+    if all(
+        c.null_count == 0 and (pa.types.is_integer(c.type) or pa.types.is_boolean(c.type))
+        for c in cols
+    ):
+        key_arrays = [c.to_numpy(zero_copy_only=False) for c in cols]
+        codes = key_arrays
+    else:
+        kpdf = _table_to_pandas(tbl.select(keys), key_fields, tz)
+        key_arrays = [kpdf[k].to_numpy() for k in keys]
+        codes = [
+            a if a.dtype.kind in "iub" else pd.factorize(a, use_na_sentinel=False)[0]
+            for a in key_arrays
+        ]
     diff = None
     for c in codes:
         d = c[1:] != c[:-1]
         diff = d if diff is None else (diff | d)
-    bounds = np.flatnonzero(np.r_[True, diff, True]) if len(pdf) else np.array([0])
-    return pdf, bounds
-
-
-class _ResultBatcher:
-    """Accumulate per-group transformer results and flush as few, large
-    pandas frames. dict results (the cheap output form) are collected as
-    plain dicts and materialized into ONE DataFrame per flush — building a
-    1-row DataFrame per group costs ~0.5 ms and dominates small-group
-    workloads otherwise.
-
-    Flushing is bounded by BUFFERED ROWS as well as result count, so user
-    functions returning large per-group frames don't multiply peak executor
-    memory by the chunk factor. Output row order within a flush groups
-    dict-rows before frame-rows; the engine's output order is unspecified
-    (Spark partition concatenation order already is)."""
-
-    def __init__(
-        self,
-        out_cols: list[str],
-        name: str,
-        chunk: int = 1024,
-        row_chunk: int = 65536,
-        nested_cols: "set[str] | None" = None,
-    ):
-        self.out_cols = out_cols
-        self.name = name
-        self.chunk = chunk
-        self.row_chunk = row_chunk
-        self.nested_cols = nested_cols
-        self.dicts: list[dict] = []
-        self.frames: list[pd.DataFrame] = []
-        self.n = 0
-        self.rows = 0
-
-    def add(self, res: Any) -> "pd.DataFrame | None":
-        if res is None:
-            return None
-        if isinstance(res, dict):
-            # dict-of-arrays (schema-aware): one output row per array
-            # element, scalar values broadcast — the multi-row sibling of
-            # the scalar-dict cheap path; array cells aimed at
-            # array-typed columns stay single-row
-            res = _expand_dict_result(res, self.nested_cols)
-        if isinstance(res, dict):
-            self.dicts.append(res)
-            self.rows += 1
-        else:
-            pdf = _conform(_result_to_pandas(res, self.out_cols), self.out_cols, self.name)
-            if len(pdf) == 0:
-                return None
-            self.frames.append(pdf)
-            self.rows += len(pdf)
-        self.n += 1
-        if self.n >= self.chunk or self.rows >= self.row_chunk:
-            return self.flush()
-        return None
-
-    def flush(self) -> "pd.DataFrame | None":
-        if self.n == 0:
-            return None
-        parts = []
-        if self.dicts:
-            parts.append(_conform(pd.DataFrame(self.dicts), self.out_cols, self.name))
-            self.dicts = []
-        parts.extend(self.frames)
-        self.frames = []
-        self.n = 0
-        self.rows = 0
-        if not parts:
-            return None
-        return parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
+    bounds = np.flatnonzero(np.r_[True, diff, True]) if tbl.num_rows else np.array([0])
+    return bounds, key_arrays
 
 
 class _ArrowResultBatcher:
@@ -912,6 +884,52 @@ class _ArrowResultBatcher:
         return out.to_batches()
 
 
+def _run_groups(
+    batches: "Iterable[pa.RecordBatch]",
+    key_fields: list,
+    tz: str,
+    start: Callable,
+    batcher: _ArrowResultBatcher,
+    needs_kv: bool,
+) -> "Iterable[pa.RecordBatch]":
+    """The grouped executor behind ``transform`` and ``cotransform``: one
+    Arrow stream per shuffle partition, whose key groups arrive as
+    unbroken runs (the engine's partition sort). Assembles the partition,
+    finds the runs, and feeds each group's raw result to ``batcher``.
+
+    ``start(tbl)`` runs once per non-empty partition and returns the
+    caller's per-group input builder ``run(a, b, kv)``: the raw user result
+    for rows ``[a, b)``, or None to skip the group. ``kv`` holds the group's
+    key values (float NaN normalized to None, the pandas view of a NULL
+    key), or is None when ``needs_kv`` is false — skipping that extraction
+    saves ~5µs/group. The whole partition stays in worker memory until its
+    last group has run."""
+    it = iter(batches)
+    first = next(it, None)
+    if first is None:
+        return
+    tbl = pa.Table.from_batches(list(itertools.chain([first], it)))
+    if tbl.num_rows == 0:
+        return
+    run = start(tbl)
+    bounds, key_arrays = _group_bounds(tbl, key_fields, tz)
+    for a, b in zip(bounds[:-1], bounds[1:]):
+        kv = (
+            [
+                None if isinstance(v, float) and pd.isna(v) else v
+                for v in (arr[a] for arr in key_arrays)
+            ]
+            if needs_kv
+            else None
+        )
+        out = batcher.add(run(a, b, kv))
+        if out is not None:
+            yield from out
+    out = batcher.flush()
+    if out is not None:
+        yield from out
+
+
 def transform(
     df: DataFrame,
     using: Any,
@@ -943,12 +961,14 @@ def transform(
     there is one row per physical partition). See fugue_spark/compile.py
     for the traceable surface.
 
-    Scale posture: grouped path is one hash exchange on the keys (Catalyst
-    plans the shuffle, AQE sizes it); ungrouped path is shuffle-free. The
-    user function only ever sees one logical partition in memory — with an
-    ``Iterable[pd.DataFrame]`` annotation it sees Arrow-sized batches and
-    can stream, so worker memory is bounded by batch size, not partition
-    size.
+    Scale posture: grouped path is one hash exchange on the keys (or the
+    requested algo's placement) plus one partition sort; the worker holds
+    the WHOLE shuffle partition in memory while it runs the groups, so its
+    memory is bounded by partition size (set it with ``num``), and grouped
+    ``Iterable[...]`` forms do not stream: each group arrives whole.
+    Ungrouped path is shuffle-free; there an ``Iterable[pd.DataFrame]``
+    function sees Arrow-sized batches and can stream, so worker memory is
+    bounded by batch size, not partition size.
 
     Group-frame contract: frames handed to the function are zero-copy
     slices of the partition block with a fresh zero-based RangeIndex.
@@ -997,8 +1017,7 @@ def transform(
             hints = {}
         in_form = _classify(hints.get(data_param.name, data_param.annotation), _IN_PANDAS)
 
-        def call(pdf: pd.DataFrame, cursor: PartitionCursor) -> Any:
-            data = _to_input(pdf, in_form)
+        def call(data: Any, cursor: PartitionCursor) -> Any:
             if wants_cursor:
                 return fn(cursor, data, **kwargs)
             return fn(data, **kwargs)
@@ -1050,7 +1069,7 @@ def transform(
     def run_one(pdf: pd.DataFrame, cursor: PartitionCursor) -> pd.DataFrame:
         pdf = _sort_pandas(pdf, presort)
         try:
-            res = call(pdf, cursor)
+            res = call(_to_input(pdf, in_form), cursor)
             out = _result_to_pandas(res, out_cols, _nested_out_cols(out_schema))
             if discard_output:
                 return pd.DataFrame(columns=out_cols)
@@ -1066,115 +1085,58 @@ def transform(
 
     safe_keys = [name_to_safe[k] for k in keys]
 
-    if compile is None:
-        compile = _default_compile_mode()
-    if compile:
+    def attempt_compile(mode: "bool | str") -> DataFrame:
         from fugue_spark.compile import TraceError, try_compile_aggregation
 
-        try:
-            if is_class:
-                raise TraceError("class transformers are not traceable")
-            if err_types or init_fn is not None or discard_output or "callback" in kwargs:
-                raise TraceError(
-                    "compile is incompatible with ignore_errors/on_init/callback"
-                )
-            return try_compile_aggregation(
-                df,
-                fn,
-                keys,
-                presort,
-                out_schema,
-                kwargs,
-                wants_cursor,
-                name_to_safe,
-                in_schema=input_schema,
-                allow_ungrouped_agg=(compile != "auto"),
-                purity_check=(compile == "auto"),
-            )
-        except TraceError:
-            if compile == "strict":
-                raise
-            # fall through to the pandas/arrow execution paths unchanged
-        except Exception as exc:
-            # a non-TraceError here is a compiler defect, not an
-            # untraceable function: surface it when the user explicitly
-            # asked for compilation; for "auto" warn (a silent fallback
-            # would hide tracer regressions) and run the pandas path,
-            # which must always be able to run the call
-            if compile == "strict" or compile is True:
-                raise
-            import warnings
+        if is_class:
+            raise TraceError("class transformers are not traceable")
+        if err_types or init_fn is not None or discard_output or "callback" in kwargs:
+            raise TraceError("compile is incompatible with ignore_errors/on_init/callback")
+        return try_compile_aggregation(
+            df,
+            fn,
+            keys,
+            presort,
+            out_schema,
+            kwargs,
+            wants_cursor,
+            name_to_safe,
+            in_schema=input_schema,
+            allow_ungrouped_agg=(mode != "auto"),
+            purity_check=(mode == "auto"),
+        )
 
-            warnings.warn(
-                "fugue_spark auto-compile failed unexpectedly "
-                f"({type(exc).__name__}: {exc}); falling back to the "
-                "pandas execution path",
-                RuntimeWarning,
-                stacklevel=2,
-            )
+    compiled = _compile_or_fallback(compile, attempt_compile, "pandas")
+    if compiled is not None:
+        return compiled
 
     if keys:
-        contiguous = False
-        if spec.algo not in ("default", "hash"):
-            df = apply_partition_spec(df, PartitionSpec(by=safe_keys, num=spec.num, algo=spec.algo))
-            use_apply = False
-        else:
-            # co-locate each key group via one hash exchange; groups are then
-            # processed with an in-process pandas groupby inside mapInPandas.
-            # This beats groupBy().applyInPandas by 10-50× when groups are
-            # small: one Arrow stream per PARTITION instead of a JVM↔Python
-            # round trip per GROUP. (applyInPandas remains available via
-            # partition algo='hash' + engine internals for huge-group cases.)
-            # The count is pinned explicitly: AQE would otherwise coalesce by
-            # BYTE size, collapsing a python-cost-heavy stage onto one core.
+        # every key group must reach the grouped executor as ONE unbroken
+        # run: place the groups, then one partition-level sort on the
+        # NaN-safe keys and the presort (nulls-last on data columns = the
+        # pandas na_position="last" contract of the reference), so the
+        # python side finds groups by run length and never sorts
+        key_exprs = _nan_safe_key_exprs(df, safe_keys)
+        if spec.algo in ("default", "hash"):
+            # co-locate each key group via one hash exchange and run a whole
+            # partition per Arrow stream: 10-50× faster than
+            # groupBy().applyInPandas when groups are small (one JVM↔Python
+            # round trip per PARTITION instead of per GROUP)
             num = spec.resolve_num(df)
-            if num <= 0:
-                # python stages are CPU-bound: parallelism is core-bound, not
-                # byte-bound, so a byte-sized shuffle conf (tune_for_input on
-                # a small input) must not throttle the python workers
-                num = max(
-                    int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")),
-                    df.sparkSession.sparkContext.defaultParallelism,
-                )
-            key_exprs = _nan_safe_key_exprs(df, safe_keys)
-            df = df.repartition(num, *key_exprs)
-            # one partition-level sort makes every group a contiguous run
-            # (the python side then finds groups by run-length, no pandas
-            # groupby) and applies presort inside each run for free;
-            # nulls-last on data columns = the pandas na_position="last"
-            # contract of the reference
-            from pyspark.sql import functions as F
+            df = df.repartition(num if num > 0 else _python_stage_partitions(df), *key_exprs)
+        else:
+            df = apply_partition_spec(df, PartitionSpec(by=safe_keys, num=spec.num, algo=spec.algo))
+        from pyspark.sql import functions as F
 
-            sort_cols = [e.asc_nulls_first() for e in key_exprs] + [
-                (
-                    F.col(name_to_safe[n]).asc_nulls_last()
-                    if asc
-                    else F.col(name_to_safe[n]).desc_nulls_last()
-                )
+        df = df.sortWithinPartitions(
+            *[e.asc_nulls_first() for e in key_exprs],
+            *[
+                F.col(name_to_safe[n]).asc_nulls_last()
+                if asc
+                else F.col(name_to_safe[n]).desc_nulls_last()
                 for n, asc in presort
-            ]
-            df = df.sortWithinPartitions(*sort_cols)
-            presort = []  # already applied
-            contiguous = True
-            use_apply = False
-
-        if use_apply:  # pragma: no cover - kept for parity experiments
-            def grouped_udf(pdf: pd.DataFrame) -> pd.DataFrame:
-                maybe_init()
-                kv = [pdf.iloc[0][k] for k in keys] if len(pdf) else [None] * len(keys)
-                return run_one(pdf, PartitionCursor(keys, kv, _partition_no()))
-
-            return df.groupBy(*keys).applyInPandas(grouped_udf, schema=out_schema)
-
-        def run_raw(pdf: pd.DataFrame, cursor: PartitionCursor) -> Any:
-            pdf = _sort_pandas(pdf, presort)
-            try:
-                res = call(pdf, cursor)
-                if discard_output:
-                    return None
-                return res
-            except err_types:
-                return None
+            ],
+        )
 
         from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -1182,81 +1144,45 @@ def transform(
         batcher_safe = safe_out if rename_out else None
         tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
         in_fields = list(df.schema.fields)  # safe names, orig order/types
-        # arrow-annotated functions on the contiguous path skip pandas
-        # entirely: each group is a zero-copy Table.slice
-        arrow_fast = (
-            not is_class
-            and in_form in (_IN_ARROW, _IN_ITER_ARROW)
-            and contiguous
-            and not presort
-        )
-
+        key_fields = [df.schema[k] for k in safe_keys]
+        # arrow-annotated functions skip pandas entirely: each group is a
+        # zero-copy Table.slice
+        arrow_in = not is_class and in_form in (_IN_ARROW, _IN_ITER_ARROW)
         # class transformers read inst.cursor; bare functions only need the
-        # per-group kv extraction if they declared a cursor parameter —
-        # skipping it (and the PartitionCursor allocation) saves ~5µs/group
-        needs_cursor = is_class or (not is_class and wants_cursor)
+        # per-group kv extraction if they declared a cursor parameter
+        needs_cursor = is_class or wants_cursor
 
-        def grouped_arrow_udf(it: "Iterable[pa.RecordBatch]") -> "Iterable[pa.RecordBatch]":
-            it = iter(it)
-            first = next(it, None)
-            if first is None:
-                return
-            tbl = pa.Table.from_batches(list(itertools.chain([first], it)))
-            if tbl.num_rows == 0:
-                return
+        def start(tbl: pa.Table) -> Callable:
             maybe_init()
             pno = _partition_no()
+            if arrow_in:
+                if rename_in:
+                    tbl = tbl.rename_columns(orig_in)
+            else:
+                make_group = _group_frame_maker(_restore_in(_table_to_pandas(tbl, in_fields, tz)))
+
+            def run(a: int, b: int, kv: "list | None") -> Any:
+                if arrow_in:
+                    data = tbl.slice(a, b - a)
+                    if in_form == _IN_ITER_ARROW:
+                        data = iter([data])
+                else:
+                    data = _to_input(make_group(a, b), in_form)
+                try:
+                    res = call(data, None if kv is None else PartitionCursor(keys, kv, pno))
+                except err_types:
+                    return None
+                return None if discard_output else res
+
+            return run
+
+        def grouped_udf(it: "Iterable[pa.RecordBatch]") -> "Iterable[pa.RecordBatch]":
             batcher = _ArrowResultBatcher(
                 out_cols, arrow_out_schema, "transform", safe_names=batcher_safe
             )
-            shared_cursor = PartitionCursor(keys, [None] * len(keys), pno)
+            return _run_groups(it, key_fields, tz, start, batcher, needs_cursor)
 
-            def cursor_at(a: int, key_arrays: list) -> PartitionCursor:
-                if not needs_cursor:
-                    return shared_cursor
-                kv = [
-                    None if isinstance(v, float) and pd.isna(v) else v
-                    for v in (arr[a] for arr in key_arrays)
-                ]
-                return PartitionCursor(keys, kv, pno)
-
-            if arrow_fast:
-                if rename_in:
-                    tbl = tbl.rename_columns(orig_in)
-                fast = _arrow_group_bounds(tbl, keys)
-                if fast is not None:  # null-free int keys: no pandas at all
-                    bounds, key_arrays = fast
-                else:
-                    kpdf = tbl.select(keys).to_pandas()
-                    _, bounds = _group_bounds(kpdf, keys, contiguous=True)
-                    key_arrays = [kpdf[k].values for k in keys]
-                for a, b in zip(bounds[:-1], bounds[1:]):
-                    cursor = cursor_at(a, key_arrays)
-                    sub = tbl.slice(a, b - a)
-                    data = sub if in_form == _IN_ARROW else iter([sub])
-                    try:
-                        res = fn(cursor, data, **kwargs) if wants_cursor else fn(data, **kwargs)
-                        out = batcher.add(None if discard_output else res)
-                    except err_types:
-                        out = None
-                    if out is not None:
-                        yield from out
-            else:
-                pdf = _restore_in(_table_to_pandas(tbl, in_fields, tz))
-                pdf, bounds = _group_bounds(pdf, keys, contiguous)
-                make_group = _group_frame_maker(pdf)
-                key_arrays = [pdf[k].values for k in keys] if needs_cursor else []
-                for a, b in zip(bounds[:-1], bounds[1:]):
-                    out = batcher.add(
-                        run_raw(make_group(a, b), cursor_at(a, key_arrays))
-                    )
-                    if out is not None:
-                        yield from out
-            out = batcher.flush()
-            if out is not None:
-                yield from out
-
-        res = df.mapInArrow(grouped_arrow_udf, schema=exec_schema)
+        res = df.mapInArrow(grouped_udf, schema=exec_schema)
         return res.toDF(*out_cols) if rename_out else res
 
     # ungrouped: apply per physical partition (coarse) via mapInPandas

@@ -90,20 +90,33 @@ def test_transform_list_and_dict_forms(spark):
 
 
 def test_transform_grouped_with_presort_and_cursor(spark):
+    # every partition algo feeds the grouped executor one partition sort:
+    # keys, then presort with NULLs last in both directions
     df = make_df(
         spark,
-        [["a", 3], ["a", 1], ["a", 2], ["b", 9], ["b", 7]],
+        [["a", 3], ["a", None], ["a", 1], ["a", 2], ["b", 9], ["b", 7]],
         "k:str,v:int",
-    )
+    ).repartition(3)
 
     def head1(cursor, pdf: pd.DataFrame) -> pd.DataFrame:
         assert cursor.key_value_dict["k"] == pdf.iloc[0]["k"]
         return pdf.head(1)
 
-    res = fa.transform(df, head1, schema="*", partition={"by": ["k"], "presort": "v DESC"})
-    assert rows(res) == [("a", 3), ("b", 9)]
-    res = fa.transform(df, head1, schema="*", partition={"by": ["k"], "presort": "v ASC"})
-    assert rows(res) == [("a", 1), ("b", 7)]
+    def ordered(cursor, t: pa.Table) -> dict:
+        return {"k": cursor["k"], "vs": str(t.column("v").to_pylist())}
+
+    cases = [(algo, df) for algo in ("default", "even", "rand")]
+    cases.append(("coarse", df.coalesce(1)))  # one physical partition
+    for algo, d in cases:
+        for presort, heads, orders in (
+            ("v DESC", [("a", 3), ("b", 9)], [("a", "[3, 2, 1, None]"), ("b", "[9, 7]")]),
+            ("v ASC", [("a", 1), ("b", 7)], [("a", "[1, 2, 3, None]"), ("b", "[7, 9]")]),
+        ):
+            part = {"by": ["k"], "presort": presort, "algo": algo, "num": 4}
+            res = fa.transform(d, head1, schema="*", partition=part)
+            assert rows(res) == heads, f"algo={algo} presort={presort}"
+            res = fa.transform(d, ordered, schema="k:str,vs:str", partition=part)
+            assert rows(res) == orders, f"algo={algo} presort={presort}"
 
 
 def test_transform_params_and_ignore_errors(spark):
@@ -292,6 +305,79 @@ def test_transform_nan_null_float_keys_one_group(spark):
         assert got == [(1, 5), (2, 3), (2, 7)], f"algo={algo}: {got}"
 
 
+def test_grouped_executor_groups_straddle_arrow_batches(spark):
+    # 3-row Arrow batches split most key groups across batch boundaries;
+    # every grouped form must give the same rows as under the default
+    # batch size (and as plain pandas)
+    data = [[i % 7, f"g{i % 5}", (i * 37) % 11, float(i)] for i in range(60)]
+    df = make_df(spark, data, "k:long,g:str,v:long,x:double").repartition(2)
+    ref = pd.DataFrame(data, columns=["k", "g", "v", "x"])
+    left = df.select("k", "v")
+    right = make_df(spark, [[i % 9, i] for i in range(40)], "k:long,y:long")
+
+    def by_pd(pdf: pd.DataFrame) -> dict:
+        return {"k": int(pdf.k.iloc[0]), "n": len(pdf), "s": int(pdf.v.sum())}
+
+    def by_pa(t: pa.Table) -> dict:
+        return {"k": t.column("k")[0].as_py(), "n": t.num_rows, "s": sum(t.column("v").to_pylist())}
+
+    def by_cursor(cursor, pdf: pd.DataFrame) -> dict:
+        return {"g": cursor["g"], "n": len(pdf), "s": int(pdf.v.sum())}
+
+    def top2(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.head(2)
+
+    def top2_pa(t: pa.Table) -> pa.Table:
+        return t.slice(0, 2)
+
+    def zip_pd(a: pd.DataFrame, b: pd.DataFrame) -> dict:
+        return {"k": int(a.k.iloc[0]), "na": len(a), "nb": len(b), "s": int(a.v.sum() + b.y.sum())}
+
+    def zip_pa(cursor, a: pa.Table, b: pd.DataFrame) -> dict:
+        return {"k": cursor["k"], "na": a.num_rows, "nb": len(b), "s": sum(a.column("v").to_pylist()) + int(b.y.sum())}
+
+    def batch_sizes(tables: Iterable[pa.Table]) -> Iterator[pa.Table]:
+        for t in tables:
+            yield pa.table({"n": pa.array([t.num_rows], pa.int64())})
+
+    def run_all() -> dict:
+        grouped = {"by": ["k"]}
+        presorted = {"by": ["k"], "presort": "v DESC, x ASC"}
+        return {
+            "pd": rows(fa.transform(df, by_pd, schema="k:long,n:long,s:long", partition=grouped, compile=False)),
+            "pa": rows(fa.transform(df, by_pa, schema="k:long,n:long,s:long", partition=grouped, compile=False)),
+            "cursor": rows(fa.transform(df, by_cursor, schema="g:str,n:long,s:long", partition={"by": ["g"]}, compile=False)),
+            "presort": rows(fa.transform(df, top2, schema="*", partition=presorted)),
+            "presort_pa": rows(fa.transform(df, top2_pa, schema="*", partition=presorted)),
+            "zip_pd": rows(fa.cotransform([left, right], zip_pd, schema="k:long,na:long,nb:long,s:long", compile=False)),
+            "zip_pa": rows(fa.cotransform([left, right], zip_pa, schema="k:long,na:long,nb:long,s:long", how="full_outer", compile=False)),
+        }
+
+    want = run_all()
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        sizes = [r[0] for r in fa.transform(df, batch_sizes, schema="n:long").collect()]
+        got = run_all()
+    finally:
+        spark.conf.set(conf, old)
+    assert sizes and max(sizes) <= 3 and sum(sizes) == 60
+    assert got == want
+
+    exp = ref.groupby("k").agg(n=("v", "size"), s=("v", "sum")).reset_index()
+    assert want["pd"] == want["pa"] == sorted(exp.itertuples(index=False, name=None))
+    exp_g = ref.groupby("g").agg(n=("v", "size"), s=("v", "sum")).reset_index()
+    assert want["cursor"] == sorted(exp_g.itertuples(index=False, name=None))
+    top = ref.sort_values(["v", "x"], ascending=[False, True]).groupby("k").head(2)
+    assert want["presort"] == want["presort_pa"] == rows_of(top)
+    assert len(want["zip_pd"]) == 7 and len(want["zip_pa"]) == 9
+
+
+def rows_of(pdf: pd.DataFrame) -> list:
+    return sorted(pdf.itertuples(index=False, name=None), key=lambda t: tuple(map(str, t)))
+
+
 def test_transform_grouped_arrow_fast_path(spark):
     # pa.Table-annotated fn + partition.by → zero-copy per-group Table slice
     df = make_df(spark, [[1, 10], [1, 20], [2, 5], [3, 7], [3, 9]], "k:int,v:int")
@@ -408,7 +494,11 @@ def test_group_frame_maker_lazy_cache_semantics():
             "i": pd.array([10, 20, 30, 40, 50, 60], dtype="int32"),
         }
     )
-    _, bounds = _group_bounds(pdf, ["k"], contiguous=True)
+    from pyspark.sql import types as T
+
+    bounds, _ = _group_bounds(
+        pa.Table.from_pandas(pdf), [T.StructField("k", T.LongType())], "UTC"
+    )
     make = _group_frame_maker(pdf)
     pairs = list(zip(bounds[:-1], bounds[1:]))
 
