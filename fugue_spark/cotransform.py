@@ -61,21 +61,11 @@ def _union_cotransform(
     the tag), so no python-side sort runs per group. The groups run on
     transform's grouped executor (``_run_groups``); ``call(frames, kv)``
     gets one input per side and returns the raw user result."""
-    cross = len(keys) == 0
     side_forms = side_forms or ["pd"] * len(dfs)
     payloads = [[c for c in d.columns if c not in keys] for d in dfs]
-    if cross:
-        # whole-frame zip: a constant surrogate key makes every row one
-        # group; the reference's cross zip likewise serializes each input
-        # to a single-partition blob (execution_engine.py:1026-1029)
-        keys = ["__xkey__"]
     parts = []
     for i, (d, cols) in enumerate(zip(dfs, payloads)):
-        proj = (
-            [F.lit(0).alias("__xkey__")]
-            if cross
-            else [F.col(k) for k in keys]
-        ) + [F.lit(i).alias("__tag__")]
+        proj = [F.col(k) for k in keys] + [F.lit(i).alias("__tag__")]
         for j, (dj, colsj) in enumerate(zip(dfs, payloads)):
             for c in colsj:
                 if i == j:
@@ -91,10 +81,13 @@ def _union_cotransform(
     # NaN-safe key exprs: float NULL and NaN must co-partition and sort
     # adjacent — pandas treats them as one key (see _nan_safe_key_exprs)
     key_exprs = _nan_safe_key_exprs(combined, keys)
+    # whole-frame (cross) zip: no keys, so one partition is the one group;
+    # the reference's cross zip likewise serializes each input to a
+    # single-partition blob (execution_engine.py:1026-1029)
     combined = (
-        combined.repartition(1)
-        if cross
-        else combined.repartition(_python_stage_partitions(combined), *key_exprs)
+        combined.repartition(_python_stage_partitions(combined), *key_exprs)
+        if keys
+        else combined.repartition(1)
     )
     # JVM-side sort: every (key, tag) run arrives unbroken in the Arrow
     # stream, so the python side slices groups by run-length with no sort.
@@ -130,9 +123,10 @@ def _union_cotransform(
     # one unbroken run in its own filtered frame regardless of tag interleaving,
     # and the per-side exclusive prefix sums index any (a, b) boundary.
     # One fewer comparison column in the partition sort.
-    combined = combined.sortWithinPartitions(
-        *[e.asc_nulls_first() for e in key_exprs], *presort_exprs
-    )
+    if key_exprs or presort_exprs:
+        combined = combined.sortWithinPartitions(
+            *[e.asc_nulls_first() for e in key_exprs], *presort_exprs
+        )
     out_cols = [f.name for f in out_schema.fields]
     side_src = [
         [(c if c in keyset else f"__in{i}__{c}") for c in in_columns[i]]
@@ -212,12 +206,9 @@ def _union_cotransform(
 
         return run
 
-    # cross zip: one group, the constant surrogate key, and no key values
-    needs_kv = wants_kv and not cross
-
     def udf(it):
         batcher = _ArrowResultBatcher(out_cols, arrow_out_schema, "cotransform")
-        return _run_groups(it, key_fields, tz, start, batcher, needs_kv)
+        return _run_groups(it, key_fields, tz, start, batcher, wants_kv)
 
     return combined.mapInArrow(udf, schema=out_schema)
 

@@ -28,8 +28,6 @@ can pick survivors; ``dedup_exact`` also offers keep-first directly.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -40,16 +38,12 @@ def _materialize_index(df: DataFrame) -> DataFrame:
     """Lazily materialize a corpus-sized inverted index that several plan
     branches read (lazy local checkpoint — same fault-tolerance posture as
     before; swap for a reliable checkpoint on a cluster where executor loss
-    must be survivable). Storage level is env-tunable for measurement:
-    FUGUE_SPARK_INDEX_STORAGE=DISK_ONLY keeps the index out of the executor
-    heap (the index is a large fraction of heap at corpus scale; GC-driven
-    swings vs a sequential spill/read are a measured tradeoff)."""
+    must be survivable). Stored MEMORY_AND_DISK: DISK_ONLY keeps the index
+    out of the executor heap but measured 2x slower on p6 at sf10, the GC
+    relief not paying for the write (OPTIMIZATION_r10.md)."""
     from pyspark import StorageLevel
 
-    level = getattr(
-        StorageLevel, os.environ.get("FUGUE_SPARK_INDEX_STORAGE", "MEMORY_AND_DISK")
-    )
-    return df.localCheckpoint(eager=False, storageLevel=level)
+    return df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
 
 __all__ = [
     "dedup_exact",

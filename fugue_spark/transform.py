@@ -8,22 +8,25 @@ kept: a bare function declares its input/output shape via type annotations
 (fugue/dataframe/function_wrapper.py:322-553 registers the same forms) and
 its output schema via ``schema=`` or a ``# schema:`` comment hint.
 
-Execution maps onto Spark's Arrow-vectorized Python UDFs:
+Every call runs on ``df.mapInArrow``, and ``_ArrowResultBatcher`` conforms
+every result to the output schema:
 
-* grouped (``partition.by``)      → place the key groups, one
-                                    ``sortWithinPartitions`` on keys then
-                                    presort, and ``df.mapInArrow``: the
-                                    grouped executor (``_run_groups``,
-                                    shared with cotransform) slices each
-                                    key group out of the partition by run
-                                    length
-* ungrouped / coarse              → ``df.mapInPandas`` (streaming iterator,
-                                    so ``Iterable[pd.DataFrame]`` functions
-                                    never materialize a whole partition)
-* arrow-annotated functions       → same paths; grouped ones get zero-copy
-                                    ``Table.slice`` groups, no pandas
+* grouped (``partition.by``) and  → place the key groups, one
+  ungrouped / coarse                ``sortWithinPartitions`` on keys then
+                                    presort, and the grouped executor
+                                    (``_run_groups``, shared with
+                                    cotransform): it slices each key group
+                                    out of the partition by run length; an
+                                    ungrouped call is one group holding the
+                                    whole physical partition
+* ungrouped ``Iterable[...]``     → streamed: the function gets one input
+  (no presort, ignore_errors or     per Arrow batch, so it never
+  discarded output)                 materializes a whole partition
+* arrow-annotated functions       → same paths with no pandas on input;
+                                    grouped ones get zero-copy
+                                    ``Table.slice`` groups
 
-Grouped presort runs JVM-side in that one partition sort (nulls last, the
+Presort runs JVM-side in that one partition sort (nulls last, the
 pandas na_position='last' convention of take/presort). ``on_init`` fires
 once per physical partition; ``ignore_errors`` turns listed exceptions into
 empty output for that logical partition (reference: processors.py:330-338).
@@ -36,7 +39,7 @@ import itertools
 import re
 import types as _types
 import typing
-from collections.abc import Iterable
+from collections.abc import Iterable, Iterator
 from typing import Any, Callable
 
 import numpy as np
@@ -341,10 +344,6 @@ def _to_input(pdf: pd.DataFrame, form: str) -> Any:
         return pdf
     if form == _IN_ITER_PANDAS:
         return iter([pdf])
-    if form == _IN_ARROW:
-        return pa.Table.from_pandas(pdf, preserve_index=False)
-    if form == _IN_ITER_ARROW:
-        return iter([pa.Table.from_pandas(pdf, preserve_index=False)])
     if form == _IN_LISTS:
         return pdf.values.tolist()
     if form == _IN_ITER_LISTS:
@@ -360,33 +359,21 @@ def _to_input(pdf: pd.DataFrame, form: str) -> Any:
     raise AssertionError(form)
 
 
-def _nested_out_cols(out_schema: "T.StructType") -> "set[str]":
-    """Output columns whose declared type is itself array/map/struct: a
-    list-valued dict entry for one of these is a single CELL, not a
-    multi-row expansion."""
-    return {
-        f.name
-        for f in out_schema.fields
-        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType))
-    }
-
-
-def _expand_dict_result(res: dict, nested_cols: "set[str] | None") -> "dict | pd.DataFrame":
+def _expand_dict_result(res: dict, nested_cols: "set[str]") -> "dict | pd.DataFrame":
     """dict results are ONE row — unless a value is array-like AND its
     declared output column is scalar-typed, which is the dict-of-arrays
     multi-row form (one row per element, scalar values broadcast; the
     pandas twin of the compiled window shape). Values aimed at
-    array/struct/map columns never trigger expansion; in a multi-row
-    result they are CELLS, repeated onto every row."""
-    skip = nested_cols if nested_cols is not None else set()
+    array/struct/map columns (``nested_cols``) never trigger expansion; in
+    a multi-row result they are CELLS, repeated onto every row."""
     listy = (list, tuple, np.ndarray, pd.Series)
-    arrays = [k for k, v in res.items() if isinstance(v, listy) and k not in skip]
+    arrays = [k for k, v in res.items() if isinstance(v, listy) and k not in nested_cols]
     if not arrays:
         return res
     n = len(res[arrays[0]])
     out = {}
     for k, v in res.items():
-        if k in skip and isinstance(v, listy):
+        if k in nested_cols and isinstance(v, listy):
             # nested-typed column in a multi-row result: a sequence OF
             # sequences matching the row count is per-row cells; anything
             # else (a flat array) is ONE cell repeated onto every row
@@ -397,34 +384,6 @@ def _expand_dict_result(res: dict, nested_cols: "set[str] | None") -> "dict | pd
         else:
             out[k] = v  # expanding array, or scalar broadcast by pandas
     return pd.DataFrame(out)
-
-
-def _result_to_pandas(
-    res: Any, out_cols: list[str], nested_cols: "set[str] | None" = None
-) -> pd.DataFrame:
-    if res is None:
-        return pd.DataFrame(columns=out_cols)
-    if isinstance(res, pd.DataFrame):
-        return res
-    if isinstance(res, pa.Table):
-        return res.to_pandas()
-    if isinstance(res, dict):
-        res = _expand_dict_result(res, nested_cols)
-        if isinstance(res, pd.DataFrame):
-            return res
-        return pd.DataFrame([res], columns=out_cols)
-    if isinstance(res, Iterable):
-        items = list(res)
-        if not items:
-            return pd.DataFrame(columns=out_cols)
-        if isinstance(items[0], pd.DataFrame):
-            return pd.concat(items, ignore_index=True)
-        if isinstance(items[0], pa.Table):
-            return pa.concat_tables(items).to_pandas()
-        if isinstance(items[0], dict):
-            return pd.DataFrame(items, columns=out_cols)
-        return pd.DataFrame(items, columns=out_cols)
-    raise ValueError(f"unsupported transform output {type(res)}")
 
 
 def _conform(pdf: pd.DataFrame, out_cols: list[str], name: str) -> pd.DataFrame:
@@ -523,22 +482,9 @@ def _check_validations(rules: "dict | None", df: DataFrame, spec: PartitionSpec)
             raise ValueError(f"unknown validation rule {rule!r}")
 
 
-def _sort_pandas(pdf: pd.DataFrame, presort: list[tuple[str, bool]]) -> pd.DataFrame:
-    if not presort:
-        return pdf
-    return pdf.sort_values(
-        [n for n, _ in presort],
-        ascending=[a for _, a in presort],
-        na_position="last",
-        kind="mergesort",
-    )
-
-
-
-
 def _needs_pandas_conv(dt: T.DataType) -> bool:
     """Fields whose ``pyarrow.Table.to_pandas`` output differs from pyspark's
-    mapInPandas conversion semantics (tz localization, map→dict, struct
+    pandas-UDF conversion semantics (tz localization, map→dict, struct
     field handling) and need the pyspark converter applied."""
     return isinstance(dt, (T.TimestampType, T.StructType, T.MapType)) or (
         isinstance(dt, T.ArrayType) and _needs_pandas_conv(dt.elementType)
@@ -547,7 +493,7 @@ def _needs_pandas_conv(dt: T.DataType) -> bool:
 
 def _table_to_pandas(tbl: pa.Table, fields: list, tz: str) -> pd.DataFrame:
     """One whole-partition Arrow→pandas conversion with pyspark's
-    mapInPandas semantics (serializers.py arrow_to_pandas): date_as_object,
+    pandas-UDF semantics (serializers.py arrow_to_pandas): date_as_object,
     nanosecond coercion, and — only for the fields that need it — the
     pyspark per-column converter (maps become dicts, tz-aware timestamps
     localize). Converting once per partition instead of once per Arrow
@@ -738,7 +684,10 @@ def _group_bounds(tbl: pa.Table, key_fields: list, tz: str):
     converts the key columns with pyspark's pandas semantics and
     factorizes them: this is the one place that keeps the NaN-is-a-key
     contract (float NaN and NULL become ONE code) and makes
-    objects/strings comparable."""
+    objects/strings comparable. With no keys the whole partition is one
+    group."""
+    if not key_fields:
+        return np.array([0, tbl.num_rows]), []
     keys = [f.name for f in key_fields]
     cols = [tbl.column(k) for k in keys]
     if all(
@@ -768,8 +717,10 @@ class _ArrowResultBatcher:
     result forms. dict results (the cheap output form) go straight to
     ``pa.Table.from_pylist`` against the output schema (~4× cheaper than
     building a pandas frame and letting the serializer re-convert it);
-    pa.Table results are conformed and cast Arrow-side; pandas/iterable
-    results take one ``from_pandas`` per flush.
+    pa.Table results are conformed and cast Arrow-side; pandas results and
+    row iterables take one ``from_pandas`` each. An iterator of frames
+    (pandas, Table or RecordBatch) streams: each item is added on its own,
+    so an Arrow stream never converts to pandas or collects into a list.
 
     Flushing is bounded by buffered rows as well as result count (user
     functions returning large per-group frames don't multiply peak
@@ -821,7 +772,7 @@ class _ArrowResultBatcher:
             t = t.cast(self.schema)
         return t
 
-    def add(self, res: Any) -> "list[pa.RecordBatch] | None":
+    def add(self, res: Any) -> "Iterable[pa.RecordBatch] | None":
         if res is None:
             return None
         if isinstance(res, dict):
@@ -851,7 +802,17 @@ class _ArrowResultBatcher:
             self.tables.append(self._conform_arrow(pa.Table.from_batches([res])))
             self.rows += res.num_rows
         else:
-            pdf = _conform(_result_to_pandas(res, self.out_cols), self.out_cols, self.name)
+            if not isinstance(res, pd.DataFrame):
+                if not isinstance(res, Iterable):
+                    raise ValueError(f"unsupported {self.name} output {type(res)}")
+                it = iter(res)
+                first = next(it, None)
+                if first is None:
+                    return None
+                if isinstance(first, (pd.DataFrame, pa.Table, pa.RecordBatch)):
+                    return self._add_each(itertools.chain([first], it))
+                res = pd.DataFrame([first, *it], columns=self.out_cols)
+            pdf = _conform(res, self.out_cols, self.name)
             if len(pdf) == 0:
                 return None
             self.tables.append(
@@ -862,6 +823,12 @@ class _ArrowResultBatcher:
         if self.n >= self.chunk or self.rows >= self.row_chunk:
             return self.flush()
         return None
+
+    def _add_each(self, frames: Iterable) -> "Iterable[pa.RecordBatch]":
+        for frame in frames:
+            out = self.add(frame)
+            if out is not None:
+                yield from out
 
     def flush(self) -> "list[pa.RecordBatch] | None":
         if self.n == 0:
@@ -966,9 +933,12 @@ def transform(
     the WHOLE shuffle partition in memory while it runs the groups, so its
     memory is bounded by partition size (set it with ``num``), and grouped
     ``Iterable[...]`` forms do not stream: each group arrives whole.
-    Ungrouped path is shuffle-free; there an ``Iterable[pd.DataFrame]``
-    function sees Arrow-sized batches and can stream, so worker memory is
-    bounded by batch size, not partition size.
+    Ungrouped calls are shuffle-free (unless ``num``/``algo`` asks for
+    placement) and run on the same executor with the whole physical
+    partition as one group. Only ungrouped ``Iterable[pd.DataFrame]`` /
+    ``Iterable[pa.Table]`` functions without presort, ``ignore_errors`` or
+    discarded output stream: they see Arrow-sized batches, so worker
+    memory is bounded by batch size, not partition size.
 
     Group-frame contract: frames handed to the function are zero-copy
     slices of the partition block with a fresh zero-based RangeIndex.
@@ -1028,9 +998,9 @@ def transform(
     keys = list(spec.by)
     input_schema = df.schema
 
-    # pyspark's pandas-UDF entry points cannot resolve exotic field names
+    # pyspark's Python-UDF entry points cannot resolve exotic field names
     # (e.g. a literal '.'); run the exchange under safe aliases and restore
-    # the user-visible names at both pandas boundaries.
+    # the user-visible names at both Arrow boundaries.
     orig_in = list(df.columns)
     safe_in = [
         c if _SAFE_NAME_RE.fullmatch(c) else f"__fugue_in_{i}__"
@@ -1053,29 +1023,12 @@ def transform(
         else out_schema
     )
 
-    def _restore_in(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pdf.set_axis(orig_in, axis=1) if rename_in else pdf
-
-    def _to_safe_out(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pdf.set_axis(safe_out, axis=1) if rename_out else pdf
-
     init_state: list[bool] = []  # once per python worker (≈ physical partition)
 
     def maybe_init() -> None:
         if init_fn is not None and not init_state:
             init_state.append(True)
             init_fn(input_schema)
-
-    def run_one(pdf: pd.DataFrame, cursor: PartitionCursor) -> pd.DataFrame:
-        pdf = _sort_pandas(pdf, presort)
-        try:
-            res = call(_to_input(pdf, in_form), cursor)
-            out = _result_to_pandas(res, out_cols, _nested_out_cols(out_schema))
-            if discard_output:
-                return pd.DataFrame(columns=out_cols)
-            return _conform(out, out_cols, "transform")
-        except err_types:
-            return pd.DataFrame(columns=out_cols)
 
     def _partition_no() -> int:
         from pyspark import TaskContext
@@ -1110,22 +1063,23 @@ def transform(
     if compiled is not None:
         return compiled
 
-    if keys:
-        # every key group must reach the grouped executor as ONE unbroken
-        # run: place the groups, then one partition-level sort on the
-        # NaN-safe keys and the presort (nulls-last on data columns = the
-        # pandas na_position="last" contract of the reference), so the
-        # python side finds groups by run length and never sorts
-        key_exprs = _nan_safe_key_exprs(df, safe_keys)
-        if spec.algo in ("default", "hash"):
-            # co-locate each key group via one hash exchange and run a whole
-            # partition per Arrow stream: 10-50× faster than
-            # groupBy().applyInPandas when groups are small (one JVM↔Python
-            # round trip per PARTITION instead of per GROUP)
-            num = spec.resolve_num(df)
-            df = df.repartition(num if num > 0 else _python_stage_partitions(df), *key_exprs)
-        else:
-            df = apply_partition_spec(df, PartitionSpec(by=safe_keys, num=spec.num, algo=spec.algo))
+    # every logical partition must reach the python side as ONE unbroken
+    # run: place the groups, then one partition-level sort on the NaN-safe
+    # keys and the presort (nulls-last on data columns = the pandas
+    # na_position="last" contract of the reference), so the python side
+    # finds groups by run length and never sorts. An ungrouped call is one
+    # group: the whole physical partition.
+    key_exprs = _nan_safe_key_exprs(df, safe_keys)
+    if keys and spec.algo in ("default", "hash"):
+        # co-locate each key group via one hash exchange and run a whole
+        # partition per Arrow stream: 10-50× faster than
+        # groupBy().applyInPandas when groups are small (one JVM↔Python
+        # round trip per PARTITION instead of per GROUP)
+        num = spec.resolve_num(df)
+        df = df.repartition(num if num > 0 else _python_stage_partitions(df), *key_exprs)
+    else:
+        df = apply_partition_spec(df, PartitionSpec(by=safe_keys, num=spec.num, algo=spec.algo))
+    if keys or presort:
         from pyspark.sql import functions as F
 
         df = df.sortWithinPartitions(
@@ -1138,107 +1092,89 @@ def transform(
             ],
         )
 
-        from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_out_schema = to_arrow_schema(out_schema)  # user-visible names
-        batcher_safe = safe_out if rename_out else None
-        tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
-        in_fields = list(df.schema.fields)  # safe names, orig order/types
-        key_fields = [df.schema[k] for k in safe_keys]
-        # arrow-annotated functions skip pandas entirely: each group is a
-        # zero-copy Table.slice
-        arrow_in = not is_class and in_form in (_IN_ARROW, _IN_ITER_ARROW)
-        # class transformers read inst.cursor; bare functions only need the
-        # per-group kv extraction if they declared a cursor parameter
-        needs_cursor = is_class or wants_cursor
+    arrow_out_schema = to_arrow_schema(out_schema)  # user-visible names
+    batcher_safe = safe_out if rename_out else None
+    tz = df.sparkSession.conf.get("spark.sql.session.timeZone", "UTC")
+    in_fields = list(df.schema.fields)  # safe names, orig order/types
+    key_fields = [df.schema[k] for k in safe_keys]
 
-        def start(tbl: pa.Table) -> Callable:
-            maybe_init()
-            pno = _partition_no()
-            if arrow_in:
-                if rename_in:
-                    tbl = tbl.rename_columns(orig_in)
-            else:
-                make_group = _group_frame_maker(_restore_in(_table_to_pandas(tbl, in_fields, tz)))
+    def new_batcher() -> _ArrowResultBatcher:
+        return _ArrowResultBatcher(out_cols, arrow_out_schema, "transform", safe_names=batcher_safe)
 
-            def run(a: int, b: int, kv: "list | None") -> Any:
-                if arrow_in:
-                    data = tbl.slice(a, b - a)
-                    if in_form == _IN_ITER_ARROW:
-                        data = iter([data])
-                else:
-                    data = _to_input(make_group(a, b), in_form)
-                try:
-                    res = call(data, None if kv is None else PartitionCursor(keys, kv, pno))
-                except err_types:
-                    return None
-                return None if discard_output else res
-
-            return run
-
-        def grouped_udf(it: "Iterable[pa.RecordBatch]") -> "Iterable[pa.RecordBatch]":
-            batcher = _ArrowResultBatcher(
-                out_cols, arrow_out_schema, "transform", safe_names=batcher_safe
-            )
-            return _run_groups(it, key_fields, tz, start, batcher, needs_cursor)
-
-        res = df.mapInArrow(grouped_udf, schema=exec_schema)
-        return res.toDF(*out_cols) if rename_out else res
-
-    # ungrouped: apply per physical partition (coarse) via mapInPandas
-    df = apply_partition_spec(df, spec)
-    streaming = (
-        not is_class
+    if (
+        not keys
+        and not is_class
         and in_form in (_IN_ITER_PANDAS, _IN_ITER_ARROW)
         and not presort
         and not err_types
         and not discard_output
-    )
-
-    if streaming and in_form == _IN_ITER_ARROW and not rename_in and not rename_out:
-        # true arrow path: no pandas materialization at either boundary
-        # (also sidesteps pandas timestamp munging — the reference needed
-        # special handling there, execution_engine.py:300-305)
-        def arrow_udf(it: "Iterable[pa.RecordBatch]") -> "Iterable[pa.RecordBatch]":
+    ):
+        # ungrouped Iterable[...] forms stream: the function gets one input
+        # per Arrow batch, so worker memory is bounded by batch size
+        def stream_udf(it: "Iterable[pa.RecordBatch]") -> "Iterable[pa.RecordBatch]":
             it = iter(it)
             first = next(it, None)
             if first is None:
-                return
+                return  # skip empty physical partitions (reference behavior)
             maybe_init()
-            cursor = PartitionCursor([], [], _partition_no())
-            tables = (
-                pa.Table.from_batches([b]) for b in itertools.chain([first], it)
-            )
-            res = fn(cursor, tables, **kwargs) if wants_cursor else fn(tables, **kwargs)
-            if isinstance(res, pa.Table):
-                res = [res]
-            for t in res:
-                t = t.select(out_cols) if set(out_cols) <= set(t.column_names) else t
-                yield from t.to_batches()
+            data: Any = (pa.Table.from_batches([b]) for b in itertools.chain([first], it))
+            if rename_in:
+                data = (t.rename_columns(orig_in) for t in data)
+            if in_form == _IN_ITER_PANDAS:
+                data = (_table_to_pandas(t, in_fields, tz) for t in data)
+            batcher = new_batcher()
+            out = batcher.add(call(data, PartitionCursor([], [], _partition_no())))
+            if out is not None:
+                yield from out
+            out = batcher.flush()
+            if out is not None:
+                yield from out
 
-        return df.mapInArrow(arrow_udf, schema=out_schema)
+        res = df.mapInArrow(stream_udf, schema=exec_schema)
+        return res.toDF(*out_cols) if rename_out else res
 
-    def map_udf(it: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        it = iter(it)
-        first = next(it, None)
-        if first is None:
-            return  # skip empty physical partitions (reference behavior)
-        chain = (_restore_in(b) for b in itertools.chain([first], it))
+    # arrow-annotated functions skip pandas entirely: each group is a
+    # zero-copy Table.slice
+    arrow_in = not is_class and in_form in (_IN_ARROW, _IN_ITER_ARROW)
+    # class transformers read inst.cursor; bare functions only need the
+    # per-group kv extraction if they declared a cursor parameter
+    needs_cursor = is_class or wants_cursor
+    # ignore_errors must also catch what a lazy result raises as it is
+    # consumed, and discarded output must still run the function's side
+    # effects: materialize iterator results inside the try
+    eager = bool(err_types) or discard_output
+
+    def start(tbl: pa.Table) -> Callable:
         maybe_init()
-        cursor = PartitionCursor([], [], _partition_no())
-        if streaming:
-            # feed batches straight through — bounded memory
-            batches: Any = chain
-            if in_form == _IN_ITER_ARROW:
-                batches = (pa.Table.from_pandas(b, preserve_index=False) for b in chain)
-            res = fn(cursor, batches, **kwargs) if wants_cursor else fn(batches, **kwargs)
-            out = _result_to_pandas(res, out_cols, _nested_out_cols(out_schema))
-            yield _to_safe_out(_conform(out, out_cols, "transform"))
-        else:
-            pdf = pd.concat(list(chain), ignore_index=True)
-            yield _to_safe_out(run_one(pdf, cursor))
+        pno = _partition_no()
+        if rename_in:
+            tbl = tbl.rename_columns(orig_in)
+        if not arrow_in:
+            make_group = _group_frame_maker(_table_to_pandas(tbl, in_fields, tz))
 
-    res = df.mapInPandas(map_udf, schema=exec_schema)
+        def run(a: int, b: int, kv: "list | None") -> Any:
+            if arrow_in:
+                data = tbl.slice(a, b - a)
+                if in_form == _IN_ITER_ARROW:
+                    data = iter([data])
+            else:
+                data = _to_input(make_group(a, b), in_form)
+            try:
+                res = call(data, None if kv is None else PartitionCursor(keys, kv, pno))
+                if eager and isinstance(res, Iterator):
+                    res = list(res)
+            except err_types:
+                return None
+            return None if discard_output else res
+
+        return run
+
+    def grouped_udf(it: "Iterable[pa.RecordBatch]") -> "Iterable[pa.RecordBatch]":
+        return _run_groups(it, key_fields, tz, start, new_batcher(), needs_cursor)
+
+    res = df.mapInArrow(grouped_udf, schema=exec_schema)
     return res.toDF(*out_cols) if rename_out else res
 
 

@@ -118,6 +118,24 @@ def test_transform_grouped_with_presort_and_cursor(spark):
             res = fa.transform(d, ordered, schema="k:str,vs:str", partition=part)
             assert rows(res) == orders, f"algo={algo} presort={presort}"
 
+    # ungrouped presort: the physical partition is one group, ordered by the
+    # same JVM sort (NULLs last), for pandas and pa.Table functions alike
+    def ordered_pd(pdf: pd.DataFrame) -> dict:
+        return {"vs": str([None if pd.isna(v) else int(v) for v in pdf.v])}
+
+    def ordered_pa(t: pa.Table) -> dict:
+        return {"vs": str(t.column("v").to_pylist())}
+
+    for algo in ("default", "coarse"):
+        for presort, want in (
+            ("v DESC", "[9, 7, 3, 2, 1, None]"),
+            ("v ASC", "[1, 2, 3, 7, 9, None]"),
+        ):
+            part = {"presort": presort, "algo": algo}
+            for f in (ordered_pd, ordered_pa):
+                res = fa.transform(df.coalesce(1), f, schema="vs:str", partition=part)
+                assert rows(res) == [(want,)], f"algo={algo} presort={presort} {f.__name__}"
+
 
 def test_transform_params_and_ignore_errors(spark):
     df = make_df(spark, [["a", 1], ["b", 2]], "k:str,v:int")
@@ -134,6 +152,21 @@ def test_transform_params_and_ignore_errors(spark):
         params={"fail_on": "a"}, ignore_errors=[ValueError],
     )
     assert rows(res) == [("b", 2)]
+
+    # a lazy result raises while it is consumed; ignore_errors still drops
+    # that logical partition, grouped (one key) or ungrouped (all of it)
+    def boom_rows(pdf: pd.DataFrame, fail_on: str) -> Iterable[list[Any]]:
+        for k, v in zip(pdf.k, pdf.v):
+            if k == fail_on:
+                raise ValueError("boom")
+            yield [k, int(v)]
+
+    for part, want in (({"by": ["k"]}, [("a", 1)]), (None, [])):
+        res = fa.transform(
+            df.coalesce(1), boom_rows, schema="*", partition=part,
+            params={"fail_on": "b"}, ignore_errors=[ValueError],
+        )
+        assert rows(res) == want, part
 
 
 def test_transform_class_transformer_and_on_init(spark):
@@ -167,6 +200,16 @@ def test_out_transform_side_effect(spark, tmp_path):
     import glob
 
     assert len(glob.glob(os.path.join(out, "part_*.csv"))) == 3
+
+    # a generator function still runs for its side effects
+    def touch_rows(pdf: pd.DataFrame, sub: str) -> Iterable[list[Any]]:
+        for a in pdf.a:
+            open(os.path.join(out, f"{sub}_{a}.txt"), "w").close()
+            yield [a]
+
+    for sub, part in (("grouped", {"by": ["a"]}), ("ungrouped", None)):
+        fa.out_transform(df, touch_rows, partition=part, params={"sub": sub})
+        assert len(glob.glob(os.path.join(out, f"{sub}_*.txt"))) == 3, sub
 
 
 def test_transform_empty_partition_skip(spark):
@@ -245,6 +288,15 @@ def test_cotransform_cross(spark):
 
     res = fa.cotransform([a, b], combine, schema="v:str", how="cross")
     assert rows(res) == [("_03,_12",)]
+
+    # presort orders each whole input of a cross zip by the columns it has
+    def orders(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame({"v": [f"{list(left.b)},{list(right.c)}"]})
+
+    res = fa.cotransform(
+        [a, b], orders, schema="v:str", how="cross", partition={"presort": "b desc, c"}
+    )
+    assert rows(res) == [("[5, 4, 2],[2, 6]",)]
 
     # disjoint-schema inputs only work with cross
     c = make_df(spark, [[1.0]], "z:double")
@@ -443,6 +495,42 @@ def test_transform_iterable_arrow_native_path(spark):
     with contextlib.redirect_stdout(buf):
         res.explain("simple")
     assert "Arrow" in buf.getvalue() or "MapInArrow" in buf.getvalue()
+
+
+def test_ungrouped_stream_output_is_conformed(spark):
+    # an ungrouped Iterable[...] result is conformed to the declared schema
+    # like a grouped one: an int32 column is cast to the declared long
+    # (unconformed, the JVM reader fails on getLong)
+    from pyspark.sql import types as T
+
+    df = make_df(spark, [[i] for i in range(10)], "a:int").repartition(2)
+
+    def narrow(tables: Iterable[pa.Table]) -> Iterator[pa.Table]:
+        for t in tables:
+            yield pa.table({"n": t.column("a").cast(pa.int32())})
+
+    want = [(i,) for i in range(10)]
+    assert rows(fa.transform(df, narrow, schema="n:long")) == want
+
+    # an exotic input/output name runs under safe aliases on both sides
+    dotted = df.toDF("a.b")
+
+    def narrow_dotted(tables: Iterable[pa.Table]) -> Iterator[pa.Table]:
+        for t in tables:
+            yield pa.table({"a.b": t.column("a.b").cast(pa.int32())})
+
+    out_schema = T.StructType([T.StructField("a.b", T.LongType())])
+    res = fa.transform(dotted, narrow_dotted, schema=out_schema)
+    assert res.columns == ["a.b"] and rows(res) == want
+
+    # row-shaped items of an iterator result are rows, not frames
+    def row_lists(dfs: Iterable[pd.DataFrame]) -> Iterable[list[Any]]:
+        for pdf in dfs:
+            for a in pdf.a:
+                yield [int(a), f"r{a}"]
+
+    res = fa.transform(df, row_lists, schema="a:long,s:str")
+    assert rows(res) == [(i, f"r{i}") for i in range(10)]
 
 
 def test_grouped_transform_plan_shape(spark):
